@@ -23,11 +23,26 @@ import duckdb
 SRC = "/root/testdata/sf0.1"
 OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/sf1"
 REPLICAS = 10
-K = 10_000_000  # key offset stride per replica (all sf0.1 ids are < 10M)
+K = 10_000_000  # key offset stride per replica; checked against every id below
 
 os.makedirs(OUT, exist_ok=True)
 con = duckdb.connect()
 con.execute(f"SET threads TO {os.cpu_count()}")
+
+# Every column offset by k*K below. Replicas stay disjoint only while
+# each source id is in [0, K); check that before writing anything.
+OFFSET_COLS = {
+    "customer": ["c_custkey"], "supplier": ["s_suppkey"],
+    "part": ["p_partkey"], "orders": ["o_orderkey", "o_custkey"],
+    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
+    "events": ["event_id", "user_id"], "documents": ["doc_id"],
+    "embeddings": ["vec_id"],
+}
+for table, cols in OFFSET_COLS.items():
+    for c in cols:
+        lo, hi = con.sql(
+            f"SELECT MIN({c}), MAX({c}) FROM '{SRC}/{table}.parquet'").fetchone()
+        assert 0 <= lo and hi < K, f"{table}.{c} spans [{lo}, {hi}], outside [0, {K})"
 
 def gen(table, select_expr):
     out = f"{OUT}/{table}.parquet"

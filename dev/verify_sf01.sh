@@ -25,8 +25,7 @@ ARTIFACT="CORRECTNESS_SF01${TAG:+_$TAG}.json"
 rm -rf "$OUT"
 echo "[sf01] running Verify at sf0.1 (full registry)..."
 LOG="$(mktemp)"
-if ! SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-    sbt -batch "runMain graft.Verify /root/testdata/sf0.1 $OUT" \
+if ! sbt -batch "runMain graft.Verify /root/testdata/sf0.1 $OUT" \
     > "$LOG" 2>&1; then
   echo "[sf01] Verify FAILED — no artifact written. Tail of log:"
   tail -30 "$LOG"

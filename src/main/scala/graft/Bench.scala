@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 /** Per-round benchmark: runs every registered query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. A query that throws is reported with value -1
   * and its message under "errors" (and on stderr) — failures must never
@@ -10,15 +11,7 @@ object Bench {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadAtStart = os.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions())
-      // local[N,4]: task retries ON (production default maxFailures=4);
-      // q272 injects first-attempt task failures and needs them retried
-      .master(s"local[$cpus,4]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup OUTSIDE the timed region: the flagship star join
     // at sf0.001 exercises the parquet reader, broadcast join, hash agg

@@ -12,8 +12,8 @@ import graft.functions.{CosineSimilarity, L2Distance}
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions()) ...
+  * // or, on any SparkSession.Builder (graft.core.GraftSession.builder does)
+  * builder.withExtensions(new GraftExtensions()) ...
   * }}}
   *
   * then `SELECT cosine_sim(embedding, q_emb) ...` parses, analyzes and

@@ -1,36 +1,38 @@
 package graft
 
+import graft.core.GraftSession
+
 /** Dump `.explain("formatted")` for named queries into per-query text
   * files — the before/after plan evidence for optimization rounds
   * (`plans/r20/<query>_<tag>.txt`). Usage:
   *
-  *   sbt "runMain graft.PlanDump <outDir> <tag> <q1,q2,...>"
+  *   sbt "runMain graft.PlanDump <outDir> <tag> [q1,q2,...]"
+  *
+  * Without a query list it dumps every registered query
+  * (`SparkEntry.queries`), in sorted order.
   *
   * Environment: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  * SPARK_GRAFT_CPUS (default 32) — the bench session's shape, so the
-  * dumped plan is the plan the bench actually runs. NOTE: constructing
-  * a query executes any construction-time work it does (store builds,
-  * streaming runs); for pure-streaming queries the returned frame is
-  * just the sink read, so plan evidence for those lives in trigger
-  * telemetry instead.
+  * SPARK_GRAFT_CPUS (see `GraftSession.envCpus`) — the bench session's
+  * shape, so the dumped plan is the plan the bench actually runs. NOTE:
+  * constructing a query executes any construction-time work it does
+  * (store builds, streaming runs); for pure-streaming queries the
+  * returned frame is just the sink read, so plan evidence for those
+  * lives in trigger telemetry instead.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length == 3, "usage: PlanDump <outDir> <tag> <q1,q2,...>")
-    val Array(outDir, tag, names) = args
+    require(args.length == 2 || args.length == 3,
+      "usage: PlanDump <outDir> <tag> [q1,q2,...]")
+    val Array(outDir, tag) = args.take(2)
+    val qs = SparkEntry.queries
+    val names = args.drop(2).headOption
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(qs.keys.toSeq.sorted)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus,4]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val qs = SparkEntry.queries
-    names.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
+    names.foreach { n =>
       val fn = qs.getOrElse(n, sys.error(s"unknown query $n"))
       val plan = graft.core.CacheScope.withScope {
         fn(spark, sfDir).queryExecution.explainString(

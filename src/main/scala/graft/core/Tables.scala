@@ -58,10 +58,9 @@ object Tables {
     * once per query. At 100 TB that is the difference between an ingest
     * cost and a per-run corpus shuffle: q02's fact-fact join and q30's
     * fingerprint dedup both run exchange-free over tables written here
-    * (proved executable in BucketingSpec; plan in PLANS.md §"bucketed
-    * layout"). Choose `numBuckets` so corpus/numBuckets rows fit one
-    * task's memory — buckets are the parallelism floor for bucket-local
-    * stages.
+    * (proved executable, and exchange-free, in BucketingSpec). Choose
+    * `numBuckets` so corpus/numBuckets rows fit one task's memory —
+    * buckets are the parallelism floor for bucket-local stages.
     */
   def writeBucketed(df: DataFrame, tableName: String, numBuckets: Int,
       keys: String*): Unit =

@@ -1056,17 +1056,12 @@ object DedupTextQueries {
         .foreach(p => fs.delete(p, true))
     seam("swept")
     val genLoc = RunStore.nextGenerationDir(s, tableName)
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val saved = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try
+    graft.core.GraftSession.withConf(s)(
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       graft.core.Tables.writeBucketedSorted(
         s.table(tableName), tmp, spec.numBuckets,
         spec.bucketColumnNames, spec.sortColumnNames,
         path = Some(genLoc.toString))
-    finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
     seam("written")
     // carry the RunStore fingerprint sidecar (if any) so a fresh

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession.withConf
 import graft.core.Tables._
 
 /** Execution-fault gates (q272–q274): the engine's behavior under the
@@ -80,16 +81,6 @@ object FaultGateQueries {
       it
     }
     s.createDataFrame(rdd, schema)
-  }
-
-  private[queries] def withConf[T](s: SparkSession)(kvs: (String, String)*)(
-      body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
   }
 
   /** Every physical node, recursing through the AQE wrappers a plain

@@ -4,14 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession.withConf
 import graft.core.Tables._
-import graft.queries.FaultGateQueries.{allNodes, withConf}
+import graft.queries.FaultGateQueries.allNodes
 
 /** Plan-mechanism gates (q278–q288): the physical-plan
   * mechanisms a 100 TB deployment leans on that were previously proved
   * only at scalatest grain (BucketedJoinSpec, AqeSkewSpec's strategy
-  * notes, VectorFunctionsSpec's parity tests, PLANS.md's
-  * ReusedExchange mentions), each promoted to a driver-visible oracle
+  * notes, VectorFunctionsSpec's parity tests, TpcdsShapeSpec's
+  * ReusedExchange check), each promoted to a driver-visible oracle
   * row in the q272–q274 style: the DATA columns are recomputed cleanly
   * by DuckDB (hash equality = the mechanism changes no bytes), and the
   * MECHANISM columns are booleans read from the executed plan itself,

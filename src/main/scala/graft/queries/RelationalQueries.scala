@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession.withConf
 import graft.core.Tables._
 
 /** Relational core: aggregation, joins, windows, sorts, set ops.
@@ -345,7 +346,7 @@ object RelationalQueries {
     * as two stacked partial-agg'd aggregates (Catalyst lowers pivot to
     * a (lang, split) pre-aggregate — the corpus-sized reduction, map-
     * side combined — then the pivot aggregate over that groups×values-
-    * bounded frame; see PLANS.md), equivalent in data movement to the
+    * bounded frame), equivalent in data movement to the
     * oracle's single `SUM(CASE ...)` pass since everything past the
     * first partial combine is group-grain. The split comes from the
     * shared [[graft.queries.splitAssign]] contract. Empty cells
@@ -995,8 +996,7 @@ object RelationalQueries {
       case Some(x) => x.toString.toLong
       case None => sys.error("missing stat value")
     }
-    val planRowCount = graft.queries.StreamingQueries.withSessionConfs(s,
-      "spark.sql.cbo.enabled" -> "true") {
+    val planRowCount = withConf(s)("spark.sql.cbo.enabled" -> "true") {
       s.table(t).queryExecution.optimizedPlan.stats.rowCount
         .getOrElse(sys.error("CBO produced no rowCount estimate"))
         .toLong
@@ -1071,8 +1071,7 @@ object RelationalQueries {
          |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
          |  AND c_nationkey = n_nationkey AND c_custkey < 15
          |GROUP BY n_name ORDER BY n_name""".stripMargin
-    val rows = graft.queries.StreamingQueries.withSessionConfs(s,
-      "spark.sql.cbo.enabled" -> "true",
+    val rows = withConf(s)("spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true") {
       val df = s.sql(text)
       val leaves = df.queryExecution.optimizedPlan.collectLeaves()

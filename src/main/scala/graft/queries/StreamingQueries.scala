@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.core.GraftSession.withConf
+
 /** The streaming ADMISSION tiers as driver-visible, oracle-checked
   * queries (round-8 verdict #1: the stream ≡ batch guarantees lived
   * only in scalatest — CORRECTNESS never saw the streaming engine run).
@@ -358,19 +360,22 @@ object StreamingQueries {
     * against latency SLO — a deployment decision, hence the env knob.
     */
   private[graft] val SpoolFilesPerTrigger: Int =
-    sys.env.get("SPARK_GRAFT_SPOOL_FPT").flatMap(_.toIntOption)
-      .filter(_ > 0).getOrElse(2)
+    parseSpoolFpt(sys.env.get("SPARK_GRAFT_SPOOL_FPT"))
+
+  /** The FPT knob's proven range is 1..2: at 3 or more both sentinel
+    * files can land in the last batch, so final windows and outer rows
+    * are never emitted. Anything else set fails loudly; unset means 2.
+    */
+  private[graft] def parseSpoolFpt(raw: Option[String]): Int = raw match {
+    case None => 2
+    case Some(v) => v.trim.toIntOption.filter(n => n >= 1 && n <= 2)
+      .getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_SPOOL_FPT must be 1 or 2, got '$v'"))
+  }
 
   private def withFewShufflePartitions[T](s: SparkSession)(body: => T): T =
-    withShufflePartitions(s, StreamShufflePartitions)(body)
-
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, saved)
-  }
+    withConf(s)(
+      "spark.sql.shuffle.partitions" -> StreamShufflePartitions.toString)(body)
 
   /** IDEMPOTENT per-batch parquet sink (round-9 verdict #4): each
     * micro-batch overwrites its own `batch_id=<id>` partition
@@ -2830,20 +2835,6 @@ object StreamingQueries {
   private[graft] val ChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  /** Set session confs around `body`, restoring prior values (or
-    * unsetting) after — even on failure, so one provider-flipped query
-    * can never leak its provider into the rest of the run.
-    */
-  private[graft] def withSessionConfs[T](s: SparkSession,
-      confs: (String, String)*)(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
   /** q218 — LAST-TOUCH attribution on Spark 4's `transformWithState`
     * ([[graft.streaming.StreamingAttributionTws]]): q159's pipeline
     * with the state machine re-expressed as typed state variables +
@@ -2872,7 +2863,7 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", SpoolFilesPerTrigger)
       .parquet(sp.dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    withSessionConfs(s, ProviderKey -> RocksDbProvider) {
+    withConf(s)(ProviderKey -> RocksDbProvider) {
       withFewShufflePartitions(s) {
         graft.streaming.StreamingAttributionTws
           .attribute(stream, EventQueries.AttributionWindowMs,
@@ -2901,7 +2892,7 @@ object StreamingQueries {
     * so no HDFS-format state ever replays into RocksDB.
     */
   val q219RocksdbSsjoinParity: Q = (s, d) =>
-    withSessionConfs(s, ProviderKey -> RocksDbProvider) {
+    withConf(s)(ProviderKey -> RocksDbProvider) {
       q183StreamStreamJoin(s, d)
     }
 
@@ -2910,7 +2901,7 @@ object StreamingQueries {
     * runs for large state), oracle = q101's SQL VERBATIM.
     */
   val q220RocksdbDedupParity: Q = (s, d) =>
-    withSessionConfs(s, ProviderKey -> RocksDbProvider,
+    withConf(s)(ProviderKey -> RocksDbProvider,
         ChangelogKey -> "true") {
       q101StreamingOnlineNeardup(s, d)
     }
@@ -2921,7 +2912,7 @@ object StreamingQueries {
     * it gets its own provider-parity row.
     */
   val q221RocksdbSessionParity: Q = (s, d) =>
-    withSessionConfs(s, ProviderKey -> RocksDbProvider) {
+    withConf(s)(ProviderKey -> RocksDbProvider) {
       q166StreamingSessionPaths(s, d)
     }
 
@@ -2978,7 +2969,7 @@ object StreamingQueries {
       ()
     }
     def runPhase(): Unit =
-      withSessionConfs(s, ProviderKey -> RocksDbProvider,
+      withConf(s)(ProviderKey -> RocksDbProvider,
           ChangelogKey -> "true") {
         withFewShufflePartitions(s) {
           s.readStream.schema(docs.schema)
@@ -3289,7 +3280,7 @@ object StreamingQueries {
       .parquet(sp.dir)
       .filter(col("ts") >= timestamp_millis(lit(cut)))
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    withSessionConfs(s, ProviderKey -> RocksDbProvider) {
+    withConf(s)(ProviderKey -> RocksDbProvider) {
       withFewShufflePartitions(s) {
         graft.streaming.StreamingAttributionTws
           .attributeBootstrapped(live, seed,
@@ -3407,7 +3398,7 @@ object StreamingQueries {
     // pinned at 8 REGARDLESS of the deployment knob: the oracle gates
     // the frozen-at-first-run partition count itself (q236Sql pins 8),
     // so this stream's conf is part of the declared result
-    withShufflePartitions(s, 8) {
+    withConf(s)("spark.sql.shuffle.partitions" -> "8") {
       s.readStream
         .schema(s.read.parquet(deltaPath).schema)
         .option("maxFilesPerTrigger", 1)
@@ -3850,7 +3841,7 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", 1)
       .parquet(sp.dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    withSessionConfs(s, ProviderKey -> RocksDbProvider) {
+    withConf(s)(ProviderKey -> RocksDbProvider) {
       withFewShufflePartitions(s) {
         graft.streaming.StreamingAttributionTws
           .attribute(stream, EventQueries.AttributionWindowMs,

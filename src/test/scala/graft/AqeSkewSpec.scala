@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.GraftSession.withConf
+
 /** AQE skew-join handling — the AUTOMATIC counterpart to q58's manual
   * salting and q185's skew audit: when one join key carries a grossly
   * disproportionate share of rows, AQE's OptimizeSkewedJoin must split
@@ -17,15 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AqeSkewSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("OptimizeSkewedJoin splits the hot key's partition and the " +
     "answer matches the unsplit join") {
@@ -42,7 +35,7 @@ class AqeSkewSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), sum(col("v") + col("w")).as("s"))
       .collect()(0)
     val plain = run()
-    val (skewed, plan) = withConf(
+    val (skewed, plan) = withConf(spark)(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",

@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession.withConf
+
 /** The big-big CO-LOCATED join the 100 TB scaladocs lean on (q66/q172/
   * q175: "both sides bucket by doc_id and the join is exchange-free"),
   * demonstrated rather than asserted: two tables bucketed on the SAME
@@ -29,9 +31,7 @@ class BucketedJoinSpec extends AnyFunSuite {
       numBuckets = 8, bucketKeys = Seq("doc_id"), sortKeys = Seq("doc_id"))
     try {
       // broadcast off: force the co-located path to stand on its own
-      val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      withConf(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = spark.table("bjs_docs")
           .join(spark.table("bjs_meta"), "doc_id")
         val p = joined.queryExecution.executedPlan.toString
@@ -41,8 +41,6 @@ class BucketedJoinSpec extends AnyFunSuite {
         val control = spark.table("bjs_docs").join(meta, "doc_id")
         val pc = control.queryExecution.executedPlan.toString
         assert(pc.contains("Exchange hashpartitioning"), pc.take(4000))
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
       }
     } finally {
       Seq("bjs_docs", "bjs_meta").foreach(t =>

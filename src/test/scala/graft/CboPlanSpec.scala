@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
 
 /** The statistics-driven planning decision q225's hash gate cannot hold
   * (plan shape, not data): with `spark.sql.cbo.enabled` and column
@@ -78,15 +79,13 @@ class CboPlanSpec extends AnyFunSuite {
       .filter(col("k") <= 100L) // ~100 of 200k rows: stats know this
       .join(spark.table(dim), Seq("k"))
       .queryExecution.executedPlan
-    StreamingQueries.withSessionConfs(spark,
-      "spark.sql.adaptive.enabled" -> "false",
+    withConf(spark)("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString,
       "spark.sql.cbo.enabled" -> "false") {
       assert(joins(plan()) == Seq("sortmerge"),
         s"without CBO expected a shuffle join, got: ${plan()}")
     }
-    StreamingQueries.withSessionConfs(spark,
-      "spark.sql.adaptive.enabled" -> "false",
+    withConf(spark)("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString,
       "spark.sql.cbo.enabled" -> "true") {
       assert(joins(plan()) == Seq("broadcast"),
@@ -103,8 +102,7 @@ class CboPlanSpec extends AnyFunSuite {
     import spark.implicits._
     spark.range(0L, 777L).toDF("k").write.saveAsTable(t)
     spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS")
-    StreamingQueries.withSessionConfs(spark,
-      "spark.sql.cbo.enabled" -> "true") {
+    withConf(spark)("spark.sql.cbo.enabled" -> "true") {
       assert(spark.table(t).queryExecution.optimizedPlan.stats.rowCount
         .contains(BigInt(777)))
     }
@@ -128,8 +126,7 @@ class CboPlanSpec extends AnyFunSuite {
          |  AND c_nationkey = n_nationkey AND c_custkey < 15
          |GROUP BY n_name""".stripMargin
     def leafOrder(reorder: String): Seq[String] =
-      StreamingQueries.withSessionConfs(spark,
-        "spark.sql.cbo.enabled" -> "true",
+      withConf(spark)("spark.sql.cbo.enabled" -> "true",
         "spark.sql.cbo.joinReorder.enabled" -> reorder) {
         spark.sql(text).queryExecution.optimizedPlan.collectLeaves()
           .map(_.toString)

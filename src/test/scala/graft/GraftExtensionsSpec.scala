@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The injection seam: a session built `withExtensions(new
-  * GraftExtensions())` must resolve the custom expressions straight from
-  * SQL text. (The equivalent `spark.sql.extensions=graft.GraftExtensions`
-  * config is a STATIC conf bound when the SparkContext is created, so it
-  * can't be exercised inside this shared-context test JVM — same class,
-  * same apply path.)
+/** The injection seam: a session built by `GraftSession.builder` (which
+  * applies `withExtensions(new GraftExtensions())`) must resolve the
+  * custom expressions straight from SQL text. (The equivalent
+  * `spark.sql.extensions=graft.GraftExtensions` config is a STATIC conf
+  * bound when the SparkContext is created, so it can't be exercised
+  * inside this shared-context test JVM — same class, same apply path.)
   *
   * Extensions are per-SparkSession, so the test clears the JVM-default
   * session (getOrCreate would otherwise return the shared TestSpark one,
@@ -22,11 +22,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = graft.core.GraftSession.builder(4).getOrCreate()
       val r = s.sql(
         """SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
           |       l2_dist(array(0.0D, 0.0D), array(3.0D, 4.0D)) AS d""".stripMargin)

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession.withConf
 
 /** The injected optimizer rule
   * ([[graft.plans.IntervalOverlapJoinRewrite]]): an interval-overlap
@@ -14,12 +15,8 @@ import org.apache.spark.sql.functions._
   */
 class IntervalJoinRuleSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
+  private lazy val spark = graft.core.GraftSession.builder(4)
     .appName("graft-interval-rule")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions())
     .getOrCreate()
 
   private def fixture() = {
@@ -56,10 +53,8 @@ class IntervalJoinRuleSpec extends AnyFunSuite {
     * the Databricks RANGE_JOIN-hint model); these specs exercise it
     * explicitly. The marker path (q161) needs no flag.
     */
-  private def withAutodetect[T](body: => T): T = {
-    spark.conf.set("spark.graft.intervalJoin.autodetect", "true")
-    try body finally spark.conf.unset("spark.graft.intervalJoin.autodetect")
-  }
+  private def withAutodetect[T](body: => T): T =
+    withConf(spark)("spark.graft.intervalJoin.autodetect" -> "true")(body)
 
   test("the θ-join plans as the tile equi-join (Generate + no cartesian " +
     "or nested loop) and matches the rule-disabled multiset exactly — " +
@@ -75,9 +70,8 @@ class IntervalJoinRuleSpec extends AnyFunSuite {
       rows.map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(identity).map { case (k, v) => (k, v.length) }
     val rewritten = multiset(df.collect())
-    spark.conf.set("spark.graft.intervalJoin.rewrite", "false")
-    val naive = try multiset(overlapJoin(a, b).collect())
-      finally spark.conf.set("spark.graft.intervalJoin.rewrite", "true")
+    val naive = withConf(spark)("spark.graft.intervalJoin.rewrite" -> "false")(
+      multiset(overlapJoin(a, b).collect()))
     assert(rewritten.values.sum > 100, "fixture produced too few pairs")
     assert(rewritten == naive)
     }
@@ -134,9 +128,8 @@ class IntervalJoinRuleSpec extends AnyFunSuite {
       def run() = overlapJoin(a, b).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       val atDefault = run()
-      spark.conf.set("spark.graft.intervalJoin.tileMs", "100000")
-      val atSmall = try run()
-        finally spark.conf.unset("spark.graft.intervalJoin.tileMs")
+      val atSmall =
+        withConf(spark)("spark.graft.intervalJoin.tileMs" -> "100000")(run())
       assert(atDefault == atSmall)
     }
   }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession.withConf
 import graft.queries.PlanGateQueries
 
 /** Negative controls for the q278–q280 plan-mechanism gates: each
@@ -39,12 +40,8 @@ class PlanGateSpec extends AnyFunSuite {
     "shape both REFUSE the aggregate pushdown (empty PushedAggregation) " +
     "and still answer correctly") {
     val dir = s"$sf/documents.parquet"
-    val saved = Seq("spark.sql.parquet.aggregatePushdown",
-      "spark.sql.sources.useV1SourceList")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try {
+    withConf(spark)("spark.sql.parquet.aggregatePushdown" -> "true",
+      "spark.sql.sources.useV1SourceList" -> "") {
       val expected = graft.core.Tables.documents(spark, sf)
         .filter(col("n_chars") >= 400)
         .agg(count(lit(1))).head().getLong(0)
@@ -69,18 +66,13 @@ class PlanGateSpec extends AnyFunSuite {
       val desc3 = PlanGateQueries.v2ScanDescription(pushed)
       assert(desc3.contains("PushedAggregation: [COUNT(*), MIN(n_chars)]"),
         s"expected pushed COUNT/MIN, got: $desc3")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
   test("q280's census is discriminative: with exchange reuse DISABLED " +
     "the same self-join runs two distinct shuffles and the gate's " +
     "booleans flip") {
-    val saved = spark.conf.getOption("spark.sql.exchange.reuse")
-    spark.conf.set("spark.sql.exchange.reuse", "false")
-    try {
+    withConf(spark)("spark.sql.exchange.reuse" -> "false") {
       val df = PlanGateQueries.q280ExchangeReuse(spark, sf)
       val r = df.collect()
       // q280 itself re-enables reuse via withConf for its own run, so
@@ -88,10 +80,8 @@ class PlanGateSpec extends AnyFunSuite {
       // self-join built here under reuse=false.
       val agg = graft.core.Tables.documents(spark, sf).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"))
-      val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      try {
+      withConf(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
         val joined = agg.as("a")
           .join(agg.withColumnRenamed("n_docs", "n_docs_b").as("b"), "lang")
         joined.collect()
@@ -101,16 +91,10 @@ class PlanGateSpec extends AnyFunSuite {
           s"expected >= 2 distinct shuffles with reuse off, got $census\n" +
             plan.toString.take(4000))
         assert(!census._3, s"reuse reported engaged with reuse off: $census")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }
       // and the registered query, which forces reuse back ON, still
       // reports one distinct shuffle even in a reuse-off session
       assert(r.forall(_.getBoolean(3)), "q280 exchange_reused false")
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.exchange.reuse", v)
-      case None => spark.conf.unset("spark.sql.exchange.reuse")
     }
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.GraftSession.withConf
 import graft.queries._
 
 /** Physical-plan assertions: the plans we'd want at 100 TB, not just
@@ -656,18 +657,11 @@ class PlanSpec extends AnyFunSuite {
   test("AQE splits a skewed sort-merge join at runtime (the engine-level " +
     "complement to the manual salting in core/Skew)") {
     import spark.implicits._
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> conf.getOption(k)).toMap
-    try {
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    withConf(spark)(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       // one hot key carrying ~90% of rows, joined against a small dim
       val fact = (0 until 60000)
         .map(i => (if (i % 10 == 0) i.toLong % 97 else 7L, s"payload-$i"))
@@ -677,9 +671,6 @@ class PlanSpec extends AnyFunSuite {
       joined.collect() // AQE re-plans at runtime
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"), finalPlan.take(4000))
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 

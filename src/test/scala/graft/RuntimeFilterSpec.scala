@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession.withConf
+
 /** The engine-level sibling of q173's explicit bloom pre-gate: Catalyst's
   * own InjectRuntimeFilter plants a bloom `might_contain` probe on the
   * BIG side of a selective shuffle join, so the probe scan drops
@@ -20,14 +22,10 @@ class RuntimeFilterSpec extends AnyFunSuite {
   test("a selective shuffle join gets a bloom runtime filter on the big " +
     "probe side, with identical results") {
     val d = TestSpark.Sf0001
-    val confs = Seq(
+    withConf(spark)(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val big = graft.core.Tables.events(spark, d)
         .select(col("user_id"), col("event_id"), col("value"))
       val small = graft.core.Tables.events(spark, d)
@@ -41,9 +39,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
       val control = big.join(small, col("user_id") === col("uid"))
       assert(joined.count() == control.count() && joined.count() > 0,
         "runtime filter must not change the join result")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -5,14 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test JVM (Test / fork := true). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions())
-      .master("local[4,4]") // retries on: the q272 injection path
+    val s = graft.core.GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
 
 /** Bucketing: the 100 TB answer to the one real shuffle in the star join
   * (q02's lineitem⋈orders). Both facts bucketed+sorted on the join key
@@ -16,10 +17,8 @@ class BucketingSpec extends AnyFunSuite {
   private val sf = TestSpark.Sf0001
 
   test("bucketed fact-fact join plans without a shuffle and matches results") {
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // force the sort-merge path so the exchange (or its absence) is visible
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Tables.writeBucketed(Tables.lineitem(spark, sf),
         "li_bucketed", 8, "l_orderkey")
       Tables.writeBucketed(Tables.orders(spark, sf),
@@ -48,7 +47,6 @@ class BucketingSpec extends AnyFunSuite {
       val got = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(got == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS li_bucketed")
       spark.sql("DROP TABLE IF EXISTS orders_bucketed")
     }
@@ -80,9 +78,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("q66's cross-modal manifest join runs exchange-free over " +
     "id-bucketed tables (the claim in its doc, executable)") {
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Tables.writeBucketed(Tables.documents(spark, sf)
         .select(col("doc_id"), col("lang")), "docs_by_id", 8, "doc_id")
       Tables.writeBucketed(Tables.embeddings(spark, sf)
@@ -99,7 +95,6 @@ class BucketingSpec extends AnyFunSuite {
           col("doc_id") === col("vec_id")).count()
       assert(joined.count() == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS docs_by_id")
       spark.sql("DROP TABLE IF EXISTS emb_by_id")
     }

@@ -66,13 +66,9 @@ object StoreRaceChild {
   def main(args: Array[String]): Unit = {
     val warehouse = args(0)
     val srcDir = args(1)
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.core.GraftSession.builder(2)
       .appName("graft-store-race-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (args.length > 2 && args(2) == "fold") {

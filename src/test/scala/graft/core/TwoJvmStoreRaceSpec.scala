@@ -30,7 +30,7 @@ class TwoJvmStoreRaceSpec extends AnyFunSuite {
     val child = new ProcessBuilder(
       (Seq(System.getProperty("java.home") + "/bin/java") ++
         StoreRaceFixture.jdk17AddOpens ++
-        Seq("-Xmx2g", "-Dspark.ui.enabled=false",
+        Seq("-Xmx2g",
           "-cp", System.getProperty("java.class.path"),
           "graft.core.StoreRaceChild",
           spark.conf.get("spark.sql.warehouse.dir"), src)): _*)
@@ -128,7 +128,7 @@ class TwoJvmStoreRaceSpec extends AnyFunSuite {
         child = new ProcessBuilder(
           (Seq(System.getProperty("java.home") + "/bin/java") ++
             StoreRaceFixture.jdk17AddOpens ++
-            Seq("-Xmx2g", "-Dspark.ui.enabled=false",
+            Seq("-Xmx2g",
               "-cp", System.getProperty("java.class.path"),
               "graft.core.StoreRaceChild",
               spark.conf.get("spark.sql.warehouse.dir"), src,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
 import graft.functions.VectorFunctions._
 
 class VectorFunctionsSpec extends AnyFunSuite {
@@ -59,9 +60,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
     "codegen'd (freshName'd locals; fallback disabled would throw on a " +
     "name collision)") {
     val cents = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0))
-    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf(spark)("spark.sql.codegen.fallback" -> "false") {
       val df = Seq(
         (Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f),
           Array(0.9f, 0.1f, 0.0f), Array(0.0f, 0.8f, 0.6f)))
@@ -83,7 +82,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
       assert(r.getAs[Int]("n1") == 1 && r.getAs[Int]("n2") == 0)
       // both cosines present and sane
       assert(r.getAs[Double]("s1") > 0 && r.getAs[Double]("s2") >= 0)
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    }
   }
 
   test("SQL registration: cosine_sim usable from spark.sql") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
 import graft.queries.EventQueries
 
 /** q136's bit-interleave must be the textbook Morton code, and the
@@ -80,9 +81,7 @@ class ZOrderSpec extends AnyFunSuite {
     val hi = lo + 134217728L
     // AQE wraps the plan in a leaf AdaptiveSparkPlanExec, hiding the
     // scan node from collect — disable it for this one metric read
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    withConf(spark)("spark.sql.adaptive.enabled" -> "false") {
       val tile = spark.read.parquet(dir)
         .filter(col("zkey") >= lo && col("zkey") < hi)
       val kept = tile.count()
@@ -97,7 +96,7 @@ class ZOrderSpec extends AnyFunSuite {
       // the layout's reason to exist: the scan reads the tile's row
       // groups, not the store — under 20% of rows cross the reader
       assert(scanned * 5 < total, s"scanned=$scanned total=$total")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
   }
 
   test("frozen-grid keying (q146's fold path) SATURATES out-of-grid " +

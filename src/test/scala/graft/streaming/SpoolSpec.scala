@@ -56,4 +56,16 @@ class SpoolSpec extends AnyFunSuite {
     StreamingQueries.resetSpools()
     assert(StreamingQueries.ensureEventSpool(spark, sf) == "reused")
   }
+
+  test("SPARK_GRAFT_SPOOL_FPT outside 1..2 fails loudly, naming the " +
+    "variable; unset means 2") {
+    assert(StreamingQueries.parseSpoolFpt(None) == 2)
+    assert(StreamingQueries.parseSpoolFpt(Some("1")) == 1)
+    assert(StreamingQueries.parseSpoolFpt(Some("2")) == 2)
+    for (bad <- Seq("3", "0", "-1", "abc", "")) {
+      val e = intercept[IllegalArgumentException](
+        StreamingQueries.parseSpoolFpt(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_SPOOL_FPT"), e.getMessage)
+    }
+  }
 }

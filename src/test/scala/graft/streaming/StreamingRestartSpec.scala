@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
+import graft.queries.StreamingQueries.{ChangelogKey, ProviderKey, RocksDbProvider}
 
 /** Crash-recovery for the checkpointed streaming tiers: a query killed
   * MID-STREAM (an exception out of foreachBatch — the batch is executed
@@ -107,10 +109,8 @@ class StreamingRestartSpec extends AnyFunSuite {
     }
     val (ckptA, outA) = (fresh("ra_ckpt"), fresh("ra_out"))
     val (ckptB, outB) = (fresh("rb_ckpt"), fresh("rb_out"))
-    graft.queries.StreamingQueries.withSessionConfs(spark,
-      graft.queries.StreamingQueries.ProviderKey ->
-        graft.queries.StreamingQueries.RocksDbProvider,
-      graft.queries.StreamingQueries.ChangelogKey -> "true") {
+    withConf(spark)(ProviderKey -> RocksDbProvider,
+      ChangelogKey -> "true") {
       runDedup(ckptA, outA, crashAtBatch = None)
       val clean = sinkRows(outA)
       assert(clean.nonEmpty)

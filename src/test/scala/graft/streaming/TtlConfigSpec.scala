@@ -9,6 +9,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
+import graft.queries.StreamingQueries.{ProviderKey, RocksDbProvider}
 
 /** The transformWithState TTL surface ([[TTLConfig]]): a state variable
   * declared with a TTL silently expires after the configured
@@ -58,9 +60,7 @@ class TtlConfigSpec extends AnyFunSuite {
     "control in the same processor survives") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.queries.StreamingQueries.withSessionConfs(spark,
-      graft.queries.StreamingQueries.ProviderKey ->
-        graft.queries.StreamingQueries.RocksDbProvider) {
+    withConf(spark)(ProviderKey -> RocksDbProvider) {
       val source = MemoryStream[String]
       // a TTL'd state makes the engine schedule batches CONTINUOUSLY
       // (shouldRunAnotherBatch stays true so expired entries get

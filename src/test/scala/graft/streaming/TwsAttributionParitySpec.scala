@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
+import graft.queries.StreamingQueries.{ProviderKey, RocksDbProvider}
 
 /** One attribution input event for the parity runs. */
 case class AttrEv(user_id: Long, ts: Timestamp, event_id: Long,
@@ -133,9 +135,7 @@ class TwsAttributionParitySpec extends AnyFunSuite {
         Seq(AttrEv(-1L, new Timestamp(100000L), -1L, "sentinel"))
       val fmgws = run(StreamingAttribution.attribute,
         s"parity_fmgws_$trial", batches, -1L)
-      val tws = graft.queries.StreamingQueries.withSessionConfs(spark,
-        graft.queries.StreamingQueries.ProviderKey ->
-          graft.queries.StreamingQueries.RocksDbProvider) {
+      val tws = withConf(spark)(ProviderKey -> RocksDbProvider) {
         run(StreamingAttributionTws.attribute,
           s"parity_tws_$trial", batches, -1L)
       }
@@ -173,9 +173,7 @@ class TwsAttributionParitySpec extends AnyFunSuite {
           AttrEv(u, new Timestamp(ms), id, types(t)) } })
       val batches = live.grouped(1 + rnd.nextInt(5)).toSeq :+
         Seq(AttrEv(-1L, new Timestamp(100000L), -1L, "sentinel"))
-      val got = graft.queries.StreamingQueries.withSessionConfs(spark,
-        graft.queries.StreamingQueries.ProviderKey ->
-          graft.queries.StreamingQueries.RocksDbProvider) {
+      val got = withConf(spark)(ProviderKey -> RocksDbProvider) {
         run((ev, w, delay, ttl) => StreamingAttributionTws
           .attributeBootstrapped(ev, seed, w, delay, ttl),
           s"parity_boot_$trial", batches, -1L)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.GraftSession.withConf
+import graft.queries.StreamingQueries.{ProviderKey, RocksDbProvider}
 
 /** V1: one running per-key counter. Top-level for task serialization. */
 private[streaming] class EvoCounterV1
@@ -104,9 +106,7 @@ class TwsStateEvolutionSpec extends AnyFunSuite {
       keys.toSeq.toDF("k").coalesce(1).write.mode("append").parquet(spool)
     def runWith(proc: StatefulProcessor[String, String,
         (String, Long, Long)]): Unit =
-      graft.queries.StreamingQueries.withSessionConfs(spark,
-        graft.queries.StreamingQueries.ProviderKey ->
-          graft.queries.StreamingQueries.RocksDbProvider) {
+      withConf(spark)(ProviderKey -> RocksDbProvider) {
         val q = spark.readStream
           .schema(spark.read.parquet(spool).schema)
           .option("maxFilesPerTrigger", 1)
