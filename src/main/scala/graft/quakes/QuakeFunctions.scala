@@ -75,9 +75,8 @@ object QuakeFunctions {
       lit(" ("), timeAgo(ts, nowMs), lit(")"))
 
   /** Dictionary lookup with default (task.ts:218,225): a map literal +
-    * `element_at` + `coalesce`. Constant-folded by Catalyst; for the
-    * broadcast-join formulation of the same lookup see
-    * [[QuakePipeline.iconLookup]].
+    * `element_at` + `coalesce`. Constant-folded by Catalyst; both of
+    * [[QuakePipeline.transform]]'s lookups (icon, intensity) use it.
     */
   def lookupWithDefault(key: Column, dict: Map[Int, String],
       default: String): Column =

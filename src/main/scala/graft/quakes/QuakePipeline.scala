@@ -1,6 +1,6 @@
 package graft.quakes
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.quakes.QuakeModel._
@@ -8,22 +8,23 @@ import graft.quakes.QuakeFunctions._
 
 /** The GeoNet → CoT pipeline (reference task.ts:160-261), Spark-first.
   *
-  * Logical plan: Filter(age) ∘ Filter(quality) ∘ BroadcastJoin(icon dim) ∘
-  * Project(P1-P11). Catalyst reorders filters below the join/projection
-  * (PushDownPredicates) and folds every constant subexpression — the three
-  * manual optimizations the reference hand-codes (SURVEY.md §4) fall out
-  * automatically.
+  * Logical plan: Project(P1-P11) ∘ Filter(quality) ∘ Filter(age) ∘
+  * Generate(clock). Both dictionary lookups (P4 icon, P5 intensity) are
+  * map literals; Catalyst pushes the quality filter below the clock and
+  * folds every constant subexpression, so the three manual optimizations
+  * the reference hand-codes (SURVEY.md §4) fall out automatically.
   *
-  * `now` is captured ONCE per run and injected as a literal — matching the
-  * reference's single `Date.now()` at task.ts:184 (we deliberately collapse
-  * its second clock read at task.ts:221 into the same instant for
-  * determinism; divergence is timing-only).
+  * `now` is captured ONCE per run — matching the reference's single
+  * `Date.now()` at task.ts:184 (we deliberately collapse its second clock
+  * read at task.ts:221 into the same instant for determinism; divergence
+  * is timing-only). It reaches the plan as data, so the generated code is
+  * the same at every clock (see [[transform]]).
   *
-  * At scale: the input is one API snapshot today, but the plan is scale-free
-  * — the icon/intensity dictionaries are broadcast (11 rows), there is no
-  * shuffle anywhere (filter+project+broadcast-join only), so the same code
-  * runs unchanged over a 100 TB backfill of historical feature archives
-  * partitioned by event date.
+  * At scale: the input is one API snapshot today, and a run is one job of
+  * one stage — scan, filter, project, then the snapshot's `collect`. There
+  * is no join and no exchange, so the same `transform` runs unchanged over
+  * a 100 TB backfill of historical feature archives partitioned by event
+  * date; only the driver-side snapshot assembly is snapshot-sized.
   */
 object QuakePipeline {
 
@@ -38,27 +39,6 @@ object QuakePipeline {
       .select(col("feature.*"))
   }
 
-  /** The MMI→icon dictionary as an 11-row broadcastable dimension — the
-    * idiomatic, SQL-expressible form of the reference's `Record<number,
-    * string>` lookup (task.ts:6-18; J1 in SURVEY.md §2.6).
-    */
-  def iconDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    MmiIcons.toSeq.toDF("mmi_key", "icon_value")
-  }
-
-  /** Intensity dictionary as a 10-row dimension (task.ts:21-32). */
-  def intensityDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    MmiIntensity.toSeq.toDF("mmi_key", "intensity_value")
-  }
-
-  /** F1 — the reference pushes `MMI >= mmi` into the source URL
-    * (task.ts:176). Against a materialized table the same predicate is a
-    * plain filter that Catalyst pushes into the parquet scan.
-    */
-  def mmiFilter(cfg: QuakeConfig): Column = col("properties.mmi") >= cfg.mmi
-
   /** Full transform: GeoNet feature rows → CoT feature rows.
     *
     * @param features one row per GeoNet feature, schema [[GeoNetFeatureSchema]]
@@ -66,23 +46,25 @@ object QuakePipeline {
     * @param nowMs    run timestamp, epoch millis (task.ts:184)
     */
   def transform(features: DataFrame, cfg: QuakeConfig, nowMs: Long): DataFrame = {
-    val now = lit(nowMs)
+    // The clock is a column exploded from a one-element array literal, not
+    // `lit(nowMs)`: whole-stage codegen writes a long literal into the
+    // generated Java source, so each new clock would compile new classes
+    // every tick, while an array literal is handed to the generated code by
+    // reference and leaves its source the same at every clock.
+    val now = col("__now")
     val p = col("properties")
     val eventTs = to_timestamp(p("time"))
 
     val filtered = features
+      .withColumn("__now", explode(typedlit(Array(nowMs))))
       // F2 (task.ts:190-193): keep iff ageMinutes <= maxAge (strict `>` drops)
       .filter(ageMinutes(eventTs, now) <= cfg.maxAgeMinutes)
       // F3 (task.ts:195-204): GeoNet reclassified events are excluded
       .filter(p("quality") =!= "deleted")
 
-    // J1/P4: icon lookup as a broadcast left join + default on miss
-    val spark = features.sparkSession
-    val withIcon = filtered
-      .join(broadcast(iconDim(spark)), p("mmi") === col("mmi_key"), "left")
-      .withColumn("icon", coalesce(col("icon_value"), lit(DefaultIcon)))
-
-    // P5: intensity lookup via the constant-folded map-literal form
+    // P4/P5 (J1): both dictionary lookups are map literals with a default
+    // on miss — no join, so a tick plans no broadcast exchange
+    val icon = lookupWithDefault(p("mmi"), MmiIcons, DefaultIcon)
     val intensity =
       lookupWithDefault(p("mmi"), MmiIntensity, DefaultIntensity)
 
@@ -100,7 +82,7 @@ object QuakePipeline {
       format_string("Depth: %.1f km", p("depth")),
       concat(lit("Information Quality: "), p("quality")))
 
-    withIcon.select(
+    filtered.select(
       // P1 (task.ts:213)
       concat(lit("earthquake-"), p("publicID")).as("id"),
       lit("Feature").as("type"),
@@ -109,7 +91,7 @@ object QuakePipeline {
         // shortest-decimal half-boundaries (SURVEY.md §7.4 risk 1)
         format_string("M%.1f %s", p("magnitude"), p("locality")).as("callsign"),
         lit(CotType).as("type"),
-        col("icon"),
+        icon.as("icon"),
         p("time").as("time"),
         p("time").as("start"),
         staleIso.as("stale"),
@@ -141,7 +123,7 @@ object QuakePipeline {
   }
 
   /** K1 (task.ts:251-256): assemble the run's snapshot FeatureCollection as
-    * a single JSON payload. Driver-side single row — the POST itself is an
+    * a single JSON payload, assembled on the driver — the POST itself is an
     * external side effect outside the engine.
     */
   def toFeatureCollectionJson(cot: DataFrame): String = snapshot(cot)._1
@@ -157,17 +139,16 @@ object QuakePipeline {
   /** [[snapshot]] plus the snapshot's feature ids, still ONE action: the
     * streaming expiry sink needs the id set, and a `foreachBatch` frame
     * is recomputed per action — a separate ids collect would run the
-    * whole micro-batch twice.
+    * whole micro-batch twice. Each feature is serialized to JSON where it
+    * lives and the envelope is wrapped on the driver: a `collect_list`
+    * aggregate would add a shuffle (and a second job) for ≤100 rows.
     */
   def snapshotWithIds(cot: DataFrame): (String, Long, Seq[String]) = {
-    val row = cot.agg(collect_list(struct(col("id"), col("type"),
-      col("properties"), col("geometry"))).as("features"))
-      .select(
-        to_json(struct(lit("FeatureCollection").as("type"), col("features"))),
-        size(col("features")).cast("long"),
-        expr("transform(features, f -> f.id)"))
-      .head()
-    (row.getString(0), row.getLong(1), row.getSeq[String](2))
+    val rows = cot.select(col("id"), to_json(struct(col("id"), col("type"),
+      col("properties"), col("geometry")))).collect()
+    val json = rows.iterator.map(_.getString(1))
+      .mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+    (json, rows.length.toLong, rows.map(_.getString(0)).toSeq)
   }
 
   /** J2 (task.ts:195-203 comment): the snapshot sink's expiry semantics —

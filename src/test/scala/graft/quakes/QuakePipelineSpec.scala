@@ -1,6 +1,7 @@
 package graft.quakes
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -128,5 +129,37 @@ class QuakePipelineSpec extends AnyFunSuite {
     val json = QuakePipeline.toFeatureCollectionJson(run())
     assert(json.startsWith("""{"type":"FeatureCollection","features":["""))
     assert(json.contains(""""id":"earthquake-2026p000001""""))
+  }
+
+  /** The one-aggregate snapshot formulation, kept as the byte oracle for
+    * [[QuakePipeline.snapshotWithIds]]: `to_json` over a `collect_list`
+    * of the feature structs, count and ids read off the same array.
+    */
+  private def collectListSnapshot(cot: DataFrame): (String, Long, Seq[String]) = {
+    val row = cot.agg(collect_list(struct(col("id"), col("type"),
+      col("properties"), col("geometry"))).as("features"))
+      .select(
+        to_json(struct(lit("FeatureCollection").as("type"), col("features"))),
+        size(col("features")).cast("long"),
+        expr("transform(features, f -> f.id)"))
+      .head()
+    (row.getString(0), row.getLong(1), row.getSeq[String](2))
+  }
+
+  test("snapshotWithIds is byte-identical to the collect_list oracle, ids " +
+    "in feature order (default window, one-year window, empty frame)") {
+    val featureIds = """"id":"([^"]*)"""".r
+    for (cot <- Seq(run(), run(QuakeConfig(maxAgeMinutes = 525600.0)),
+        run().filter(lit(false)))) {
+      val got @ (json, n, ids) = QuakePipeline.snapshotWithIds(cot)
+      assert(got == collectListSnapshot(cot))
+      assert(n == ids.size)
+      assert(featureIds.findAllMatchIn(json).map(_.group(1)).toSeq == ids)
+    }
+    assert(QuakePipeline.snapshotWithIds(run())._3 == Seq(
+      "earthquake-2026p000001", "earthquake-2026p000002",
+      "earthquake-2026p000005"))
+    assert(QuakePipeline.snapshotWithIds(run().filter(lit(false))) ==
+      ("""{"type":"FeatureCollection","features":[]}""", 0L, Seq.empty))
   }
 }
